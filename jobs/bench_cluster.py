@@ -115,7 +115,7 @@ def run_pagerank(n_exec: int, args, kernel: str) -> dict:
             "--partitions", str(args.partitions),
         ]
     else:
-        edges = args.tc_edges if kernel in ("tc", "tc_adj") else args.edges
+        edges = args.tc_edges if kernel == "tc" else args.edges
         cmd += [
             os.path.join(REPO, "jobs", "bench_program.py"),
             "--program", kernel,

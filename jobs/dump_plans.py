@@ -7,8 +7,12 @@ driver loop), so a representative mid-run superstep plan is captured by
 building one step over a checkpoint-shaped state, inside the same conf
 the engine loop runs (AQE off, SMJ preferred, loop shuffle partitions).
 
-Usage: python jobs/dump_plans.py <out_dir> <suffix>
+``triangles`` as a third argument dumps only the triangle_counts plan,
+executed on the wiki fixture graph so AQE's final plan is the one shown.
+
+Usage: python jobs/dump_plans.py <out_dir> <suffix> [triangles]
 e.g.   python jobs/dump_plans.py plans/r06 after
+       python jobs/dump_plans.py plans/r08 after triangles
 """
 
 from __future__ import annotations
@@ -48,6 +52,17 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(_fmt(df))
         print("dumped", name)
+
+    if sys.argv[3:] == ["triangles"]:
+        from linkgraph.algos import triangle_counts
+        from linkgraph.synth import WIKI_VOTE_N, edges_df, wiki_vote_like_edges
+
+        edges = edges_df(spark, wiki_vote_like_edges()).persist()
+        tri = triangle_counts(spark, edges, vertices=spark.range(WIKI_VOTE_N))
+        tri.collect()  # AQE finalizes the plan only at execution
+        dump("triangle_counts", tri)
+        edges.unpersist()
+        return
 
     # ---- one-shot queries (top-level plan IS the executed plan)
     from linkgraph.driver_queries import QUERIES

@@ -8,8 +8,8 @@ Global count = Σ/3. Exact-match acceptance.
 Spark mapping: **degree-ordered orientation** — order vertices by
 (degree, id) and keep each undirected edge only in its low→high
 orientation; wedges are then a self-join on the low endpoint and the
-closure check a join against the oriented edge set. Degree ordering bounds
-the wedge blowup on hubs (a hub's oriented out-list holds only
+closure check a semi-join against the oriented edge set. Degree ordering
+bounds the wedge blowup on hubs (a hub's oriented out-list holds only
 higher-degree endpoints), the classic trick that makes the wedge join
 feasible at crawl scale.
 """
@@ -37,14 +37,14 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
 def _oriented_edges(und: DataFrame) -> DataFrame:
     """Degree-ordered orientation of a canonical undirected edge set.
 
-    Returns DataFrame(lo, hi, key_lo, key_hi) with lo strictly below hi in
-    the (deg, id) total order. The order key is a STRUCT — Spark orders
-    structs lexicographically, so comparisons are exact for the full
-    64-bit id range (a packed deg*2^31+id long collides and can overflow
-    on web-scale ids, silently corrupting the orientation)."""
+    Returns DataFrame(lo, hi, key_hi) with lo strictly below hi in the
+    (deg, id) total order; key_hi is hi's order key. The order key is a
+    STRUCT — Spark orders structs lexicographically, so comparisons are
+    exact for the full 64-bit id range (a packed deg*2^31+id long collides
+    and can overflow on web-scale ids, silently corrupting the
+    orientation)."""
     deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
+        und.select(F.explode(F.array("a", "b")).alias("id"))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
@@ -58,9 +58,19 @@ def _oriented_edges(und: DataFrame) -> DataFrame:
         .select(
             F.when(F.col("key_a") < F.col("key_b"), F.col("a")).otherwise(F.col("b")).alias("lo"),
             F.when(F.col("key_a") < F.col("key_b"), F.col("b")).otherwise(F.col("a")).alias("hi"),
-            F.least("key_a", "key_b").alias("key_lo"),
             F.greatest("key_a", "key_b").alias("key_hi"),
         )
+    )
+
+
+def _count_members(closed: DataFrame, cols: tuple[str, str, str], name: str) -> DataFrame:
+    """Per-vertex membership count of a set of closed triangles/cycles,
+    each row emitted once: one explode of its three members, one groupBy.
+    Returns DataFrame(id, <name>) for the vertices that occur."""
+    return (
+        closed.select(F.explode(F.array(*cols)).alias("id"))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).cast("long").alias(name))
     )
 
 
@@ -68,76 +78,36 @@ def triangle_counts(
     spark: SparkSession,
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    kernel: str = "wedge",
 ) -> DataFrame:
     """Per-vertex triangle counts; returns DataFrame(id, tri).
 
-    Two kernels over the same degree-ordered orientation (equivalence
-    pytest-pinned; the default is the measured winner on the bench graph,
-    verdict in BENCH/BASELINE.md "Triangle kernel A/B"):
+    One wedge pass over the degree-ordered orientation: a self-join of
+    the oriented edges on their low endpoint u generates each wedge
+    (u, v, w) with v below w in the order, a ``left_semi`` join against
+    the oriented edges keeps the wedges closed by (v, w), and each closed
+    triangle is emitted ONCE — one explode of its three members into one
+    ``groupBy("id")``. Each triangle is found exactly once, at its
+    order-minimal vertex. The intermediate is O(Σ outdeg²) wedge rows.
 
-    - ``wedge``: self-join on the low endpoint generates candidate wedges
-      as rows, closed by a join against the oriented edge set. The
-      intermediate is O(Σ outdeg²) ROWS through the exchange.
-    - ``adj``: build each vertex's oriented out-list once
-      (collect_list), then per oriented edge (u, v) the triangles through
-      it are ``array_intersect(adj[u], adj[v])`` — the same candidate set
-      stays PACKED in long arrays intersected JVM-side, so the exchange
-      carries O(Σ outdeg²) array ELEMENTS instead of wedge rows (no
-      per-row shuffle/hash overhead), at the cost of duplicating adj[u]
-      across u's out-edges.
-
-    Deliberately UNCACHED: the multiply-referenced subtrees (und,
-    oriented) end in shuffles, and Spark's ReusedExchange dedups
-    identical exchange subtrees at execution — so nothing is recomputed
-    per reference, while persisting these intermediates measured ~8x
-    slower (forced materialization + InMemoryRelation scan overhead in
-    place of a streamed exchange reuse)."""
-    if kernel not in ("wedge", "adj"):
-        raise ValueError(f"unknown triangle kernel: {kernel!r}")
+    The oriented edge set feeds both sides of the wedge join and the
+    closure, so it is cut once with an eager ``localCheckpoint``: ONE
+    extra Spark action per call, run here rather than at the caller's
+    action. Uncut, each of the three references re-plans the degree and
+    orientation joins. On an 8,360-edge crawl graph at local[4] a call
+    took 5.2 s with the old three-way union fan-out, 1.5 s with the
+    single emission alone, 1.1 s with ``persist`` in place of the cut,
+    and 0.63 s with the cut (BENCH/BASELINE.md "Triangle plan shape")."""
     und = _canonical_undirected(edges)
-    oriented = _oriented_edges(und)
+    oriented = _oriented_edges(und).localCheckpoint(eager=True)
     ids = vertices.select("id") if vertices is not None else vertex_ids_from_edges(edges)
-
-    if kernel == "adj":
-        adj = oriented.groupBy("lo").agg(F.sort_array(F.collect_list("hi")).alias("nbrs"))
-        closed = (
-            oriented.select("lo", "hi")
-            .join(adj.withColumnRenamed("nbrs", "n_lo"), "lo")
-            .join(
-                adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("n_hi")),
-                "hi",
-            )
-            .select("lo", "hi", F.array_intersect("n_lo", "n_hi").alias("ws"))
-            .filter(F.size("ws") > 0)
-        )
-        contrib = (
-            closed.select(F.col("lo").alias("id"), F.size("ws").cast("long").alias("n"))
-            .unionByName(
-                closed.select(F.col("hi").alias("id"), F.size("ws").cast("long").alias("n"))
-            )
-            .unionByName(
-                closed.select(F.explode("ws").alias("id"), F.lit(1).cast("long").alias("n"))
-            )
-        )
-        counts = contrib.groupBy("id").agg(F.sum("n").alias("tri"))
-        return ids.join(counts, "id", "left").select(
-            "id", F.coalesce("tri", F.lit(0)).cast("long").alias("tri")
-        )
 
     e1 = oriented.select(F.col("lo").alias("u"), F.col("hi").alias("v"), F.col("key_hi").alias("kv"))
     e2 = oriented.select(F.col("lo").alias("u"), F.col("hi").alias("w"), F.col("key_hi").alias("kw"))
     wedges = e1.join(e2, "u").filter(F.col("kv") < F.col("kw")).select("u", "v", "w")
 
     closer = oriented.select(F.col("lo").alias("v"), F.col("hi").alias("w"))
-    triangles = wedges.join(closer, ["v", "w"], "inner")  # (u, v, w) closed
-
-    tri_vertices = (
-        triangles.select(F.col("u").alias("id"))
-        .unionByName(triangles.select(F.col("v").alias("id")))
-        .unionByName(triangles.select(F.col("w").alias("id")))
-    )
-    counts = tri_vertices.groupBy("id").agg(F.count(F.lit(1)).alias("tri"))
+    triangles = wedges.join(closer, ["v", "w"], "left_semi")  # (u, v, w) closed
+    counts = _count_members(triangles, ("u", "v", "w"), "tri")
 
     return ids.join(counts, "id", "left").select(
         "id", F.coalesce("tri", F.lit(0)).cast("long").alias("tri")
@@ -160,8 +130,9 @@ def cycle_triangle_counts(
     degree-min anchoring is the same hub-safety argument as the
     undirected orientation — a hub generates wedges only toward its few
     higher-degree neighbors, never out-deg × in-deg."""
-    # uncached like triangle_counts: ReusedExchange dedups the shared
-    # shuffle subtrees; persisting measured far slower
+    # not cut like triangle_counts' oriented set: e and keyed are
+    # re-planned per reference, and ReusedExchange dedups the identical
+    # shuffle subtrees at execution
     e = (
         edges.select("src_id", "dst_id")
         .filter(F.col("src_id") != F.col("dst_id"))
@@ -169,8 +140,7 @@ def cycle_triangle_counts(
     )
     # total undirected degree orders the anchoring (hub-safety); ties by id
     deg = (
-        e.select(F.col("src_id").alias("id"))
-        .unionByName(e.select(F.col("dst_id").alias("id")))
+        e.select(F.explode(F.array("src_id", "dst_id")).alias("id"))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
@@ -181,10 +151,10 @@ def cycle_triangle_counts(
         "src_id", "dst_id", "key_s", "key_d"
     )
     out_m = keyed.filter(F.col("key_s") < F.col("key_d")).select(
-        F.col("src_id").alias("m"), F.col("dst_id").alias("x"), F.col("key_d").alias("key_x")
+        F.col("src_id").alias("m"), F.col("dst_id").alias("x")
     )
     in_m = keyed.filter(F.col("key_d") < F.col("key_s")).select(
-        F.col("dst_id").alias("m"), F.col("src_id").alias("y"), F.col("key_s").alias("key_y")
+        F.col("dst_id").alias("m"), F.col("src_id").alias("y")
     )
     wedges = (
         out_m.join(in_m, "m")
@@ -192,13 +162,8 @@ def cycle_triangle_counts(
         .select("m", "x", "y")
     )
     closer = e.select(F.col("src_id").alias("x"), F.col("dst_id").alias("y"))
-    cycles = wedges.join(closer, ["x", "y"], "inner")  # m -> x -> y -> m
-    members = (
-        cycles.select(F.col("m").alias("id"))
-        .unionByName(cycles.select(F.col("x").alias("id")))
-        .unionByName(cycles.select(F.col("y").alias("id")))
-    )
-    counts = members.groupBy("id").agg(F.count(F.lit(1)).alias("ctri"))
+    cycles = wedges.join(closer, ["x", "y"], "left_semi")  # m -> x -> y -> m
+    counts = _count_members(cycles, ("m", "x", "y"), "ctri")
     ids = vertices.select("id") if vertices is not None else vertex_ids_from_edges(edges)
     return ids.join(counts, "id", "left").select(
         "id", F.coalesce("ctri", F.lit(0)).cast("long").alias("ctri")
@@ -267,9 +232,4 @@ def triangle_counts_delta(
     tris = (
         t1.select(*cols).unionByName(t2.select(*cols)).unionByName(t3.select(*cols))
     )
-    tri_vertices = (
-        tris.select(F.col("x").alias("id"))
-        .unionByName(tris.select(F.col("y").alias("id")))
-        .unionByName(tris.select(F.col("z").alias("id")))
-    )
-    return tri_vertices.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("tri"))
+    return _count_members(tris, cols, "tri")

@@ -13,6 +13,30 @@ from pyspark.sql import SparkSession
 
 from linkgraph.conventions import DEFAULT_SHUFFLE_PARTITIONS
 
+# local mode: driver JVM == all executors; size the heap for the thread
+# count or 32 threads' shuffle buffers thrash an 8g heap — but never above
+# a share of the host's RAM: the JVM's off-heap, the Python workers and the
+# page cache need the rest, and on a swapless host a heap that can outgrow
+# RAM ends in the OOM killer instead of a GC
+DRIVER_MEM_CAP_MB = 24 * 1024
+DRIVER_MEM_RAM_SHARE = 0.5
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` verbatim
+    if set, else ``DRIVER_MEM_RAM_SHARE`` of ``MemTotal`` in ``meminfo``,
+    at most ``DRIVER_MEM_CAP_MB`` (the cap alone where ``meminfo`` is
+    unreadable, e.g. off Linux)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, int(total_kb * DRIVER_MEM_RAM_SHARE) // 1024)}m"
+
 
 def get_spark(
     app_name: str = "linkgraph",
@@ -49,9 +73,7 @@ def get_spark(
         # SHJ would hash-build the O(E) edge cache every superstep (the
         # checkpointed state scan has unknown stats and looks huge).
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # local mode: driver JVM == all executors; size the heap for the
-        # thread count or 32 threads' shuffle buffers thrash an 8g heap
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         # throughput GC keeps superstep latencies steadier than G1 here
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")

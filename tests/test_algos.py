@@ -300,18 +300,6 @@ def test_triangles_exact(spark, wiki_edges_df, wiki_vertices_df):
     assert (got == want).all()
 
 
-def test_triangles_adj_kernel_equivalent(spark, wiki_edges_df, wiki_vertices_df):
-    """The packed array_intersect kernel == the wedge-join kernel == golden,
-    exactly, on the wiki fixture (both share the degree-ordered
-    orientation; only the closure enumeration differs)."""
-    got = _vec(
-        triangle_counts(spark, wiki_edges_df, vertices=wiki_vertices_df, kernel="adj"),
-        "tri",
-    )
-    want = golden("triangles").sort_values("id")["tri"].to_numpy()
-    assert (got == want).all()
-
-
 def test_personalized_pagerank_matches_numpy(spark, wiki_edges_df, wiki_vertices_df, wiki_edges):
     """PPR (teleport restricted to a source set) == inline numpy reference
     implementing the same pinned convention, 8 fixed iterations."""

@@ -314,3 +314,37 @@ def test_delta_frontier_gather_keeps_edge_layout(spark, wiki_edges_df):
     between = "\n".join(lines[join_idx + 1 : scan_idx])
     assert "Exchange" not in between, plan
     assert "Sort" not in between, plan
+
+
+def test_triangle_counts_is_one_wedge_pass(spark, wiki_edges_df, wiki_vertices_df):
+    """triangle_counts plans its wedge join exactly once: one wedge
+    self-join, one closure semi-join and the final vertex join, each
+    reading the once-cut oriented edge set, with each closed triangle
+    emitted once (no union fan-out re-planning the wedge join per
+    triangle member). The Spark job count is pinned too, so neither the
+    fan-out nor an extra action can come back unnoticed."""
+    from linkgraph.algos import triangle_counts
+
+    sc = spark.sparkContext
+    wiki_edges_df.count()  # untracked: the session-cached fixture's build
+    group = "tc_plan_shape"
+    sc.setJobGroup(group, group)
+    try:
+        tri = triangle_counts(spark, wiki_edges_df, vertices=wiki_vertices_df)
+        tri.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # AQE prints the final plan above the initial one; audit the final
+    final = _plan(tri).split("== Initial Plan ==")[0]
+    joins = [l.strip() for l in final.splitlines() if "Join" in l]
+    assert len(joins) == 3, final
+    assert sum(" Inner," in j for j in joins) == 1, final  # wedge self-join
+    assert sum(" LeftSemi," in j for j in joins) == 1, final  # closure
+    assert sum(" LeftOuter," in j for j in joins) == 1, final  # ids ⋈ counts
+    assert "Union" not in final, final
+    assert final.count("Scan ExistingRDD") == 3, final  # oriented, cut once
+    assert final.count("Generate explode") == 1, final
+    # the orientation's checkpoint (one action, its AQE stages) + collect
+    assert jobs == 14, f"triangle_counts ran {jobs} Spark jobs (want 14)"
