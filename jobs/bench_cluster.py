@@ -283,7 +283,7 @@ def render_md(args, results, shuffle_ctrl) -> str:
         "executor-side Python workers fed via `spark-submit --py-files",
         "linkgraph.zip`, torrent broadcast, block-manager shuffle between",
         "JVMs. This exercises every executor-boundary mechanism that",
-        "single-JVM `local[N]` mode fakes (the csr->sem layout-reachability",
+        "single-JVM `local[N]` mode fakes (the sem layout-reachability",
         "guard, worker-side sem image reads, broadcast of hub/pivot tables),",
         "while still sharing one box's memory bandwidth — so the matching",
         "single-box ceiling (shuffle control, same session) is reported",

@@ -27,7 +27,7 @@ def main() -> None:
     ap.add_argument("--vertices", type=int, default=1_000_000)
     ap.add_argument("--edges", type=int, default=10_000_000)
     ap.add_argument("--iters", type=int, default=5)
-    ap.add_argument("--kernel", choices=["sql", "csr", "sem"], default="sql")
+    ap.add_argument("--kernel", choices=["sql", "sem"], default="sql")
     ap.add_argument("--salted", action="store_true")
     # FIXED partition count, decoupled from core count: a scaling
     # experiment must run the SAME job (same shuffle layout, same sem

@@ -5,7 +5,7 @@ Two fixtures:
 1. power-law: both endpoints power-law-skewed (src AND dst hubs), so both
    skew paths matter: the reduce-side dst hot key (hybrid salted
    aggregation) and the giant src edge list (vertex-cut splitting in the
-   semi-external kernel; kernel="csr" routes there).
+   semi-external kernel, kernel="sem").
 2. extreme-hub: one dst vertex receives a fixed fraction of ALL edges —
    the regime where the plain agg's single hot reducer degrades and
    salting must win (hybrid: only the hub is salted, tail stays direct).

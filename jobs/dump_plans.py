@@ -179,15 +179,7 @@ def main() -> None:
             .filter(F.col("src_id") != F.col("dst_id"))
             .distinct()
         )
-        try:
-            ls = wcc_mod._large_star(e0, dedup=False, partitions=partitions)
-            ss = wcc_mod._small_star(
-                ls, partitions=partitions, assume_oriented=True
-            )
-        except TypeError:  # round-start signature (no partitions arg)
-            ls = wcc_mod._large_star(e0, dedup=False)
-            ss = wcc_mod._small_star(ls)
-        dump("wcc_star_round", ss)
+        dump("wcc_star_round", wcc_mod._small_star(wcc_mod._large_star(e0), partitions))
 
         # lp superstep (repart kernel, unrestricted round)
         lstate = ckpt(
@@ -198,15 +190,7 @@ def main() -> None:
         nb = sym.join(
             lstate.select(F.col("id").alias("src_id"), "label"), "src_id"
         ).select("dst_id", "label")
-        if hasattr(lp_mod, "repart_winners"):
-            winners = lp_mod.repart_winners(nb, partitions)
-        else:  # round-start shape
-            counts = nb.repartition(partitions, "dst_id").groupBy("dst_id", "label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            winners = counts.groupBy("dst_id").agg(
-                F.min(F.struct((-F.col("cnt")).alias("neg_cnt"), F.col("label").alias("label"))).alias("w")
-            ).select("dst_id", F.col("w.label").alias("new_label"))
+        winners = lp_mod.repart_winners(nb, partitions)
         dump(
             "lp_superstep",
             lstate.join(winners, lstate["id"] == winners["dst_id"], "left").select(
@@ -216,17 +200,16 @@ def main() -> None:
             ),
         )
 
-        # lp frontier-round winners (only exists after r6)
-        if hasattr(lp_mod, "repart_winners"):
-            changed_srcs = lstate.filter(F.col("changed")).select(
-                F.col("id").alias("src_id")
-            )
-            hot = (
-                sym.join(changed_srcs, "src_id", "left_semi")
-                .select("dst_id").distinct()
-            )
-            nb_f = nb.join(F.broadcast(hot), "dst_id", "left_semi")
-            dump("lp_frontier_winners", lp_mod.repart_winners(nb_f, partitions))
+        # lp frontier-round winners
+        changed_srcs = lstate.filter(F.col("changed")).select(
+            F.col("id").alias("src_id")
+        )
+        hot = (
+            sym.join(changed_srcs, "src_id", "left_semi")
+            .select("dst_id").distinct()
+        )
+        nb_f = nb.join(F.broadcast(hot), "dst_id", "left_semi")
+        dump("lp_frontier_winners", lp_mod.repart_winners(nb_f, partitions))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         spark.conf.set("spark.sql.join.preferSortMergeJoin", smj)

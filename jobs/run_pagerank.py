@@ -2,7 +2,7 @@
 
     spark-submit --py-files linkgraph.zip jobs/run_pagerank.py \
         --edges /data/edges --out /data/ranks --ckpt /data/ckpt \
-        --iters 50 --eps 1e-8 --kernel csr [--resume]
+        --iters 50 --eps 1e-8 --kernel sem --layout-dir /data/sem_image [--resume]
 
 Build linkgraph.zip with:  python tools/package.py
 On a cluster, omit local master settings — spark-submit supplies them.
@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument("--ckpt", default=None)
     ap.add_argument("--iters", type=int, default=None)
     ap.add_argument("--eps", type=float, default=None)
-    ap.add_argument("--kernel", choices=["sql", "csr", "sem", "delta", "delta_sem"],
+    ap.add_argument("--kernel", choices=["sql", "sem", "delta", "delta_sem"],
                     default="sql",
                     help="delta/delta_sem = V4 frontier kernel (push-the-"
                     "change; --eps becomes the activation threshold theta; "

@@ -7,42 +7,21 @@ isolated vertices keep their label; fixed iteration count (default 10 —
 synchronous LP can oscillate, so a pinned count makes results
 exact-matchable). Exact-match acceptance.
 
-Spark mapping (SURVEY.md G4): three interchangeable aggregation kernels
-(identical pinned results; equivalence pytest-pinned):
-
-- ``two_level``: groupBy(dst, label).count() then
-  groupBy(dst).agg(min(struct(-cnt, label))) — both phases get Spark's
-  map-side partial aggregation (the message combiner), and the struct-min
-  trick avoids a window shuffle for the argmax-with-tie-break. Costs TWO
-  per-superstep exchanges, and in early supersteps (labels still ~unique)
-  BOTH carry ~|E| rows: the (dst,label) partial agg can't combine rows
-  whose labels differ, so E1 ≈ |E|, and the distinct (dst,label) pairs
-  feeding E2 are also ≈ |E|.
-- ``mode``: groupBy(dst).agg(F.mode(label, deterministic=True)) — Spark's
-  deterministic mode breaks frequency ties by the LOWEST value, exactly
-  this kernel's pinned tie-break, so the argmax collapses into the one
-  aggregate. ONE exchange per superstep, keyed on dst; partial_mode merges
-  per-dst label→count maps map-side, so the exchange carries one map entry
-  per distinct (dst,label) per map-side partition — the same volume as
-  two_level's E1, with E2 gone. (ObjectHashAggregate, not codegen; the
-  sort-based fallback above 128 groups/partition is the measured cost.)
-- ``repart``: repartition(partitions, dst) then both two_level aggs —
-  HashPartitioning(dst) satisfies the clustered distribution of BOTH
-  groupings, so the aggs and the winners side of the apply join ride one
-  ~|E|-row exchange per superstep (no map-side combine; the state side of
-  the apply join still pays its own ~|V|-row exchange off the
-  localCheckpoint, as in every kernel), and every operator stays
-  whole-stage-codegen.
-
-Default: ``repart``, pinned by the interleaved A/B in BENCH/BASELINE.md
-("LP aggregation kernel A/B"): min 0.64x of two_level at 3 supersteps and
-0.52x at 8 on the 5M-edge bench graph — one exchange per superstep beats
-map-side combining even late in convergence, because on a src-partitioned
-gather layout a dst's edges are scattered and the (dst,label) combine
-rarely fires, while the argmax exchange it saves is ~|E| rows early.
-``mode`` measured 1.7x SLOWER in both regimes (the ObjectHashAggregate
-sort-based fallback above 128 groups/partition re-sorts the gathered
-labels every superstep) — refuted, kept for the record.
+Spark mapping (SURVEY.md G4): one aggregation kernel per superstep.
+The gathered (dst, label) stream is repartitioned on dst once, then
+groupBy(dst, label).count() and the groupBy(dst) struct-min argmax (the
+smallest-label tie-break without a window shuffle) both run
+partition-local: HashPartitioning(dst) satisfies the clustered
+distribution of both groupings and co-partitions the winners with the
+apply join, so the superstep carries ONE ~|E|-row exchange downstream of
+the gather (the state side of the apply join still pays its own ~|V|-row
+exchange off the localCheckpoint) and every operator stays
+whole-stage-codegen. It won the interleaved A/B in BENCH/BASELINE.md
+("LP aggregation kernel A/B"): 0.64x of the map-side-combining two-level
+form at 3 supersteps and 0.52x at 8 on the 5M-edge bench graph, because
+on a src-partitioned gather layout a dst's edges are scattered and the
+(dst, label) combine rarely fires, while the exchange it saves is ~|E|
+rows early.
 """
 
 from __future__ import annotations
@@ -96,26 +75,20 @@ def _make_telemetry(holder: dict) -> ObservedStop:
     )
 
 
-def _two_level_winners(nb_labels: DataFrame) -> DataFrame:
+def repart_winners(nb_labels: DataFrame, partitions: int) -> DataFrame:
     """(dst_id, new_label): per-dst argmax label with the pinned
-    smallest-label tie-break, as two aggregations (count then struct-min).
-    Module-level so the plan test pins the SHIPPED pipeline, not a
-    replica (r5 ADVICE)."""
-    counts = nb_labels.groupBy("dst_id", "label").agg(
-        F.count(F.lit(1)).alias("cnt")
+    smallest-label tie-break. One explicit hash repartition on dst_id,
+    then count and struct-min run partition-local — exactly ONE exchange
+    downstream of the gathered labels (plan-pinned by
+    test_lp_repart_superstep_single_exchange, which calls THIS function)."""
+    counts = (
+        nb_labels.repartition(partitions, "dst_id")
+        .groupBy("dst_id", "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return counts.groupBy("dst_id").agg(
         F.min(F.struct((-F.col("cnt")).alias("neg_cnt"), F.col("label").alias("label"))).alias("w")
     ).select("dst_id", F.col("w.label").alias("new_label"))
-
-
-def repart_winners(nb_labels: DataFrame, partitions: int) -> DataFrame:
-    """The default (``repart``) kernel's winners pipeline: one explicit
-    hash repartition on dst_id, then both two-level aggregations run
-    partition-local — exactly ONE exchange downstream of the gathered
-    labels (plan-pinned by test_lp_repart_superstep_single_exchange,
-    which calls THIS function)."""
-    return _two_level_winners(nb_labels.repartition(partitions, "dst_id"))
 
 
 def label_propagation(
@@ -127,7 +100,6 @@ def label_propagation(
     resume: bool = False,
     partitions: int | None = None,
     telemetry: bool = True,
-    agg: str = "repart",
     frontier: float | None = LP_FRONTIER_MAX_CHANGED_FRAC,
 ) -> RunResult:
     """Run LP for a fixed number of supersteps; result state =
@@ -136,10 +108,6 @@ def label_propagation(
     ``telemetry`` (default on) logs the changed-label count per round into
     the engine metrics, observed on the superstep's own materialization —
     zero extra Spark jobs (engine.ObservedStop).
-
-    ``agg``: per-superstep aggregation kernel — "repart" (default, A/B
-    winner), "two_level", or "mode"; identical results (see module
-    docstring).
 
     ``frontier``: changed-fraction gate for the frontier-restricted
     gather (None/0 disables). Sound because synchronous LP's update is a
@@ -155,8 +123,6 @@ def label_propagation(
     requires ``telemetry`` (without it the counts are unknown and every
     round takes the unrestricted path).
     """
-    if agg not in ("two_level", "mode", "repart"):
-        raise ValueError(f"unknown LP aggregation kernel: {agg!r}")
     engine = engine or SuperstepEngine(spark)
     partitions = resolve_partitions(spark, edges, partitions)
     # loop-invariant; pre-partitioned + pre-sorted on the gather key so
@@ -201,14 +167,7 @@ def label_propagation(
             )
             if hot.count() <= LP_FRONTIER_MAX_HOT_DSTS:
                 nb_labels = nb_labels.join(F.broadcast(hot), "dst_id", "left_semi")
-        if agg == "mode":
-            winners = nb_labels.groupBy("dst_id").agg(
-                F.mode("label", True).alias("new_label")
-            )
-        elif agg == "repart":
-            winners = repart_winners(nb_labels, partitions)
-        else:
-            winners = _two_level_winners(nb_labels)
+        winners = repart_winners(nb_labels, partitions)
         return (
             state.join(winners, state["id"] == winners["dst_id"], "left")
             .select(

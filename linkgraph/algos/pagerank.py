@@ -5,21 +5,27 @@ pull-based, d=0.85, r0 = 1-d, r(v) = (1-d) + d * Σ_{u→v} r(u)/outdeg(u),
 dangling vertices contribute nothing; converge on max |Δr| < eps.
 Personalized variant: teleport term (1-d)·1{v ∈ S} (same kernels).
 
-Kernel V1 "pure-SQL": gather = edges ⋈ state on src_id, combine =
+Kernel V1 "sql": gather = edges ⋈ state on src_id, combine =
 groupBy(dst_id).sum (Spark's partial aggregation IS the message combiner),
 apply = left join back + coalesce default. Fully Catalyst/AQE-optimized.
 
-Kernel V2 "CSR gather-scatter" (BASELINE.json north_star): edges carry a
-``part`` routing column; per superstep a cogrouped ``applyInPandas`` builds
-a per-partition CSR block as Arrow/numpy arrays and runs a sparse
-gather-scatter (SpMV) emitting partial (dst_id, contrib) sums, followed by
-a shuffle-reduce. High-degree hubs are vertex-cut: their edge lists are
-split across partitions by hash(dst) and their state rows replicated to
-every partition (linkgraph/skew.py). V2 ≡ V1 within 1e-12 on fixtures.
+Kernel V3 "sem" (semi-external, the FlashGraph split, FAST'15 §2): the
+edge image is written once as parquet blocks routed by a ``part`` column
+and compiled into per-partition CSR index arrays cached in the Python
+workers; per superstep only vertex state crosses Arrow into a grouped
+``applyInPandas`` SpMV emitting partial (dst_id, contrib) sums, followed
+by a shuffle-reduce. High-degree hubs are vertex-cut: their edge lists
+are split across partitions by hash(dst) and their state rows replicated
+to every partition (linkgraph/skew.py). V3 ≡ V1 within 1e-12 on fixtures.
+
+Kernel V4 ``pagerank_delta``: push only the change from vertices whose
+|Δr| exceeded θ last superstep, on either the sql or the sem gather, so
+the convergence tail costs O(frontier edges).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 from typing import Any
 
@@ -129,10 +135,10 @@ def pagerank(
 ) -> RunResult:
     """Run PageRank to convergence; result state = (id, rank, out_deg, prev_rank).
 
-    kernel: "sql" (join+agg, Catalyst-planned), "csr" (cogrouped
-    applyInPandas SpMV), or "sem" (semi-external: adjacency blocks live as
-    parquet on storage, cached in Python workers; only vertex state crosses
-    Arrow per superstep — the FlashGraph SEM architecture, FAST'15 §2).
+    kernel: "sql" (join+agg, Catalyst-planned) or "sem" (semi-external:
+    adjacency blocks live as parquet on storage, cached in Python workers;
+    only vertex state crosses Arrow per superstep — the FlashGraph SEM
+    architecture, FAST'15 §2). Any other value raises ValueError.
 
     personalized: optional source-vertex set S; the teleport term becomes
     (1-d)·1{v ∈ S} (personalized PageRank / random walk with restart).
@@ -157,15 +163,17 @@ def pagerank(
     never the converged answer). Ids absent from ``init_ranks`` (newly
     crawled pages) fall back to the cold-start teleport value.
     """
+    if kernel not in ("sql", "sem"):
+        raise ValueError(f"unknown kernel {kernel!r}")
+    if weight_col is not None and kernel != "sql":
+        raise ValueError("weight_col is supported on the sql kernel")
+    if salted and kernel != "sql":
+        # the sem kernel carries its own skew mitigation (hub vertex-cut);
+        # silently ignoring the flag would make a salted-vs-plain
+        # comparison on it measure two identical runs
+        raise ValueError("salted is supported on the sql kernel")
     engine = engine or SuperstepEngine(spark)
     partitions = resolve_partitions(spark, edges, partitions)
-    if weight_col is not None and kernel not in ("sql",):
-        raise ValueError("weight_col is supported on the sql kernel")
-    if salted and kernel not in ("sql",):
-        # the csr/sem kernels carry their own skew mitigation (hub
-        # vertex-cut); silently ignoring the flag would make a salted-vs-
-        # plain comparison on those kernels measure two identical runs
-        raise ValueError("salted is supported on the sql kernel")
     # Loop-invariant edge table: hash-partition by the gather key ONCE,
     # sorted within partitions, and persist (build.gather_layout). Every
     # superstep's gather join then reuses the layout with no edge-side
@@ -190,30 +198,12 @@ def pagerank(
 
     tmp_layout = None
     hot = None
-    # loop-invariant frames persisted by the kernel factories (hub sets,
-    # routed edge partitions) — released in the finally so repeated ranks
+    # loop-invariant frames persisted by the kernel factories (the sem
+    # kernel's hub set) — released in the finally so repeated ranks
     # in one long-lived app (poll loops, bench sweeps) don't accumulate
     # one orphaned cache per call
     pins: list[DataFrame] = []
     try:
-        # "csr" (the cogrouped-applyInPandas V2 kernel) pays a full O(E_p)
-        # Arrow transfer of the edge block every superstep; the semi-external
-        # kernel computes the identical gather/scatter with the edge blocks on
-        # storage and only O(V_p) state crossing Arrow, and beats it at every
-        # measured scale. "csr" therefore routes to "sem" — but ONLY where the
-        # sem layout is guaranteed reachable by every worker: a local master
-        # (workers share the driver's filesystem) or an explicit caller-
-        # provided layout_dir (assumed shared storage). On a cluster with no
-        # layout_dir, the pre-reroute behavior is kept: the cogroup kernel
-        # runs anywhere via shuffle alone, so csr callers are never broken by
-        # an implicit kernel swap that would FileNotFoundError worker-side.
-        # The raw cogroup kernel stays addressable as "csr_cogroup" for
-        # equivalence testing.
-        if kernel == "csr":
-            if spark.sparkContext.master.startswith("local") or layout_dir is not None:
-                kernel = "sem"
-            else:
-                kernel = "csr_cogroup"
         if kernel == "sql":
             if salted:
                 # hybrid salting: only keys above hub_threshold are salted —
@@ -222,12 +212,7 @@ def pagerank(
                 hot = _hot_dsts(edges, hub_threshold).persist()
                 hot.count()
             step = _make_sql_step(edges, damping, salted, personalized, hot, weight_col)
-        elif kernel == "csr_cogroup":
-            step = _make_csr_step(
-                spark, edges, damping, partitions, hub_threshold, personalized,
-                pins=pins,
-            )
-        elif kernel == "sem":
+        else:
             layout_dir, tmp_layout = _resolve_sem_layout_dir(spark, layout_dir)
             step = _make_sem_step(
                 spark, edges, damping, partitions, hub_threshold, layout_dir,
@@ -236,13 +221,8 @@ def pagerank(
                 # O(E) fingerprint action + manifest for it
                 manifest=tmp_layout is None, pins=pins,
             )
-        else:
-            raise ValueError(f"unknown kernel {kernel!r}")
-
-        if kernel != "sql":
             # the gather-layout edge cache only feeds setup here (routing,
-            # layout write/fingerprint, state0) — csr supersteps read the
-            # separately-persisted edges_parts, sem supersteps read the
+            # layout write/fingerprint, state0) — sem supersteps read the
             # on-disk image. Holding an O(E) cache through the whole loop
             # is pure storage squatting; cut state0's lineage from it (one
             # O(V) job over the still-warm cache) and release it now. The
@@ -325,68 +305,12 @@ def _make_sql_step(edges: DataFrame, damping: float, salted: bool,
     return step
 
 
-# ------------------------------------------------------------------ kernel V2
+# ------------------------------------------------------------------ kernel V3
 
-# Per-worker cache of each partition's compressed edge block. Edges are
-# loop-invariant and Python workers are reused across tasks
-# (spark.python.worker.reuse), so the O(E log E) unique/index-build runs
-# ONCE per partition per run instead of every superstep — after that each
-# superstep is a pure O(V_p log V_p + E) gather/scatter, the actual CSR
-# SpMV. Keyed by a per-run token (stale runs are evicted); correctness does
-# not depend on row order, only on the edge multiset per partition, which
-# the persisted loop-invariant edge table guarantees.
-_CSR_BLOCK_CACHE: dict[tuple[int, int], tuple] = {}
-_CSR_CACHE_CAP = 16
-_CSR_RUN_COUNTER = __import__("itertools").count(1)
-
-
-def _csr_block(token: int, part: int, edge_pdf: pd.DataFrame) -> tuple:
-    # evict stale-run entries on EVERY call (not just on miss) and LRU-cap
-    # the cache, so a reused Python worker never retains O(E) index arrays
-    # from a finished run while other jobs share the app
-    for k in [k for k in _CSR_BLOCK_CACHE if k[0] != token]:
-        del _CSR_BLOCK_CACHE[k]
-    key = (token, part)
-    blk = _CSR_BLOCK_CACHE.pop(key, None)
-    if blk is None:
-        src = edge_pdf["src_id"].to_numpy(dtype=np.int64)
-        dst = edge_pdf["dst_id"].to_numpy(dtype=np.int64)
-        src_uniq, src_inv = np.unique(src, return_inverse=True)
-        dst_uniq, dst_inv = np.unique(dst, return_inverse=True)
-        blk = (src_uniq, src_inv.astype(np.int32), dst_uniq, dst_inv.astype(np.int32))
-        while len(_CSR_BLOCK_CACHE) >= _CSR_CACHE_CAP:
-            _CSR_BLOCK_CACHE.pop(next(iter(_CSR_BLOCK_CACHE)))
-    _CSR_BLOCK_CACHE[key] = blk  # (re)insert as most-recently-used
-    return blk
-
-
-def _csr_spmv_factory(damping: float, token: int):
-    """Cogrouped-map kernel: (edge block, state block) -> partial dst sums.
-
-    Gather = align state values to the block's unique src ids
-    (searchsorted over V_p, then an O(E) take via the cached inverse
-    index); scatter = bincount over the cached dst inverse index — no
-    Python per-row work; Arrow columnar in/out (SURVEY.md X3).
-    """
-
-    def csr_spmv(key: Any, edge_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(edge_pdf) == 0 or len(state_pdf) == 0:
-            return pd.DataFrame({"dst_id": pd.Series(dtype="int64"),
-                                 "contrib": pd.Series(dtype="float64")})
-        src_uniq, src_inv, dst_uniq, dst_inv = _csr_block(token, int(key[0]), edge_pdf)
-        ids = state_pdf["id"].to_numpy(dtype=np.int64)
-        vals = state_pdf["contrib"].to_numpy(dtype=np.float64)
-        order = np.argsort(ids, kind="stable")
-        ids, vals = ids[order], vals[order]
-        pos = np.searchsorted(ids, src_uniq)
-        pos = np.clip(pos, 0, len(ids) - 1)
-        hit = ids[pos] == src_uniq
-        vals_by_src = np.where(hit, vals[pos], 0.0)
-        contrib = vals_by_src[src_inv]
-        sums = np.bincount(dst_inv, weights=contrib, minlength=len(dst_uniq))
-        return pd.DataFrame({"dst_id": dst_uniq, "contrib": sums})
-
-    return csr_spmv
+# Per-run cache token (driver-side monotonic counter, serialized into the
+# kernel closure) so worker-side blocks cached by a previous run can never
+# be read by this one.
+_RUN_COUNTER = itertools.count(1)
 
 
 def _routed_edges(
@@ -437,47 +361,6 @@ def _route_state(contribs, hubs, n_hubs, parts_df, partitions):
     )
     return normal.unionByName(hub_state)
 
-
-def _make_csr_step(
-    spark: SparkSession,
-    edges: DataFrame,
-    damping: float,
-    partitions: int,
-    hub_threshold: int,
-    personalized: list[int] | None = None,
-    pins: list | None = None,
-):
-    edges_parts, hubs, n_hubs = _routed_edges(
-        edges, partitions, hub_threshold, pins=pins
-    )
-    edges_parts = edges_parts.repartition(partitions, "part").persist()
-    if pins is not None:
-        pins.append(edges_parts)
-    edges_parts.count()
-    parts_df = spark.range(partitions).select(F.col("id").cast("int").alias("part"))
-    # per-run cache token (driver-side monotonic counter, serialized into
-    # the kernel closure) so worker-side CSR blocks from a previous run can
-    # never be read by this one
-    token = next(_CSR_RUN_COUNTER)
-    kernel = _csr_spmv_factory(damping, token)
-
-    def step(state: DataFrame, iteration: int) -> DataFrame:
-        contribs = state.filter(F.col("out_deg") > 0).select(
-            "id", (F.col("rank") / F.col("out_deg")).alias("contrib")
-        )
-        routed = _route_state(contribs, hubs, n_hubs, parts_df, partitions)
-        partials = (
-            edges_parts.groupBy("part")
-            .cogroup(routed.groupBy("part"))
-            .applyInPandas(kernel, schema="dst_id long, contrib double")
-        )
-        msgs = partials.groupBy("dst_id").agg(F.sum("contrib").alias("sum_contrib"))
-        return _apply(state, msgs, damping, personalized)
-
-    return step
-
-
-# ------------------------------------------------------------------ kernel V3
 
 # Worker-side cache of semi-external adjacency blocks: (token, part) ->
 # compressed index arrays, built from the parquet block on first touch.
@@ -860,7 +743,7 @@ def _sem_layout(
         r["part"] for r in spark.read.parquet(layout_dir).select("part").distinct().collect()
     )
     parts_df = spark.range(partitions).select(F.col("id").cast("int").alias("part"))
-    token = next(_CSR_RUN_COUNTER)
+    token = next(_RUN_COUNTER)
     # manifested (reusable) images also get the host-local compiled-block
     # store: content-addressed by (layout_dir, fingerprint), so any worker
     # on a host pays the parquet-decode + index build at most once per host
@@ -885,9 +768,7 @@ def _resolve_sem_layout_dir(
             # fail fast at entry: a run-private DRIVER tempdir is not
             # reachable from executors on a real cluster, so the run
             # would pay the full O(E) layout write and then die at
-            # superstep 1 with a worker-side FileNotFoundError (the
-            # csr->sem reroute already guards this case; explicit
-            # kernel='sem' must get the same protection)
+            # superstep 1 with a worker-side FileNotFoundError
             raise ValueError(
                 "kernel='sem' on a non-local master requires layout_dir "
                 "on shared storage reachable from every executor; the "
@@ -1091,8 +972,8 @@ def pagerank_delta(
     r(v) ≥ (1-d)·(1 + d·Σ_{u→v} 1/deg(u)) the RELATIVE error is bounded
     by θ·R/(1-d) uniformly — but the ABSOLUTE error grows with in-degree
     (a 10^5-in-degree hub at θ=1e-6 can be off by ~θ·R·indeg·avg(1/deg)
-    in rank units; measured on the hub-heavy bench graph in
-    jobs/ab_pagerank_delta.py). Pick θ against the RELATIVE band you
+    in rank units; measured on the hub-heavy bench graph, BENCH/BASELINE.md
+    "Delta/frontier PageRank (V4)"). Pick θ against the RELATIVE band you
     need: θ=1e-9 keeps even hub ranks inside the 1e-6 acceptance band on
     the test fixtures; θ=0 is exact.
 
@@ -1106,6 +987,8 @@ def pagerank_delta(
     """
     from linkgraph.engine import ObservedStop
 
+    if kernel not in ("sql", "sem"):
+        raise ValueError(f"unknown kernel {kernel!r}")
     engine = engine or SuperstepEngine(spark)
     partitions = resolve_partitions(spark, edges, partitions)
     edges = gather_layout(edges, partitions)
@@ -1138,7 +1021,7 @@ def pagerank_delta(
                 msgs = gathered.groupBy("dst_id").agg(F.sum("push").alias("sum_push"))
                 return _apply_delta(state, msgs)
 
-        elif kernel == "sem":
+        else:
             layout_dir, tmp_layout = _resolve_sem_layout_dir(spark, layout_dir)
             hubs, n_hubs, edge_parts, parts_df, token, disk_key = _sem_layout(
                 spark, edges, partitions, hub_threshold, layout_dir,
@@ -1164,10 +1047,6 @@ def pagerank_delta(
                 )
                 return _apply_delta(state, msgs)
 
-        else:
-            raise ValueError(f"unknown kernel {kernel!r}")
-
-        if kernel == "sem":
             # same as pagerank(): sem supersteps read the on-disk image,
             # not the gather-layout cache — cut state0's lineage and
             # release the O(E) cache before the loop

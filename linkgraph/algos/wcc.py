@@ -173,21 +173,21 @@ def _neighborhoods(e: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(e: DataFrame, dedup: bool = True, partitions: int | None = None) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """For each center u with m = min(N(u) ∪ {u}): link every neighbor
     v > u to m (Kiveris et al., "Connected Components in MapReduce and
     Beyond", alternating algorithm).
 
-    ``dedup`` controls the INTERMEDIATE distinct only (small-star's output
-    distinct is the round's contract — the fixpoint checksum runs on a
-    deduped multiset). The intermediate is bounded at one row per
+    No distinct on this INTERMEDIATE output (small-star's output distinct
+    is the round's contract — the fixpoint checksum runs on a deduped
+    multiset). The intermediate is bounded at one row per
     (center, >-neighbor) pair — <= 2|E| with or without dedup, and each
     round's deduped OUTPUT resets the bound, so skipping it cannot
     compound across rounds; duplicates pass harmlessly through
     small-star's min-agg and are removed by its output distinct.
-    Interleaved A/B on the 5M-edge bench graph (jobs/ab_wccstar_dedup.py,
-    checksum-equal arms): skipping the shuffle is 27% faster per fixpoint
-    (18.7s vs 25.4s min-of-2), hence the default; BENCH/BASELINE.md.
+    Interleaved A/B on the 5M-edge bench graph (checksum-equal arms):
+    skipping the shuffle is 27% faster per fixpoint (18.7s vs 25.4s
+    min-of-2); BENCH/BASELINE.md "wcc_star intermediate distinct".
 
     Plan note (r6): a shared explicit repartition of the neighborhoods
     feeding both the min-agg and the join was tried and REFUTED by the
@@ -195,45 +195,36 @@ def _large_star(e: DataFrame, dedup: bool = True, partitions: int | None = None)
     the repartition, so the two consumers' exchange subtrees diverge and
     nothing is reused, while the raw repartition also forfeits the
     groupBy exchange's map-side min combine. The two-exchange shape with
-    the partial-agg combine stays (``partitions`` is accepted for
-    signature parity with ``_small_star``; the exchange counts come from
-    the session/loop shuffle-partition conf)."""
+    the partial-agg combine stays; its exchange counts come from the
+    session/loop shuffle-partition conf."""
     nb = _neighborhoods(e)
     m = nb.groupBy("src_id").agg(F.min("dst_id").alias("__mn"))
     m = m.select("src_id", F.least("__mn", "src_id").alias("__m"))
-    out = (
+    return (
         nb.filter(F.col("dst_id") > F.col("src_id"))
         .join(m, "src_id")
         .select(F.col("dst_id").alias("src_id"), F.col("__m").alias("dst_id"))
         .filter(F.col("src_id") != F.col("dst_id"))
     )
-    return out.distinct() if dedup else out
 
 
-def _small_star(
-    e: DataFrame, partitions: int | None = None, assume_oriented: bool = False
-) -> DataFrame:
+def _small_star(e: DataFrame, partitions: int) -> DataFrame:
     """For each center u over its strictly-smaller neighbors N⁻(u), with
     m = min(N⁻(u) ∪ {u}): link every v ∈ N⁻(u) and u itself to m.
 
-    ``assume_oriented`` (r6): when ``e`` is a large-star OUTPUT, every row
-    already satisfies dst < src (each emitted edge links v to
-    m = min(N(u) ∪ {u}) ≤ u < v), so the <-direction neighborhoods ARE
-    ``e`` verbatim. The general spelling unioned both edge directions and
-    filtered — which re-executed the whole large-star join subtree a
-    second time per round just to filter its reversed copy down to zero
-    rows. With the flag, ``e`` is repartitioned ONCE on the center key
-    and both the min-agg and the join consume the identical exchange
+    ``e`` is a large-star OUTPUT, so every row already satisfies
+    dst < src (each emitted edge links v to m = min(N(u) ∪ {u}) ≤ u < v)
+    and the <-direction neighborhoods ARE ``e`` verbatim — no union of
+    both edge directions, which would re-execute the whole large-star
+    join subtree a second time per round just to filter its reversed
+    copy down to zero rows. ``e`` is repartitioned ONCE on the center
+    key and both the min-agg and the join consume the identical exchange
     subtree (deduped to one ReusedExchange at execution; no filter sits
     between them to break the match, unlike large-star's shape). The
     output distinct is the one remaining exchange — its key (the
     rewritten src) is not the center key, so it cannot ride the same
     exchange."""
-    if assume_oriented:
-        nb = e
-    else:
-        nb = _neighborhoods(e).filter(F.col("dst_id") < F.col("src_id"))
-    nb = nb.repartition(partitions, "src_id") if partitions else nb.repartition("src_id")
+    nb = e.repartition(partitions, "src_id")
     m = nb.groupBy("src_id").agg(F.min("dst_id").alias("__m"))
     linked = nb.join(m, "src_id").select(
         F.col("dst_id").alias("src_id"), F.col("__m").alias("dst_id")
@@ -253,7 +244,6 @@ def wcc_star(
     max_iters: int = 50,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
-    dedup_intermediate: bool = False,
 ) -> RunResult:
     """WCC by alternating large-star/small-star contraction — O(log n)
     rounds instead of O(diameter), the right kernel for web-scale graphs
@@ -276,14 +266,7 @@ def wcc_star(
     ids = vertices.select("id") if vertices is not None else vertex_ids_from_edges(edges)
 
     def step(e: DataFrame, iteration: int) -> DataFrame:
-        return _small_star(
-            _large_star(e, dedup=dedup_intermediate, partitions=partitions),
-            partitions=partitions,
-            # large-star output is oriented dst < src by construction —
-            # skip the neighborhoods union that would re-execute the
-            # large-star join once more per round (see _small_star)
-            assume_oriented=True,
-        )
+        return _small_star(_large_star(e), partitions)
 
     prev: dict[str, tuple] = {}
     converged = {"ok": False}

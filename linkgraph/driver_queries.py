@@ -170,15 +170,6 @@ def q_graph_pagerank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.state.select("id", F.round("rank", 6).alias("rank"))
 
 
-def q_graph_pagerank_5iter_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics via the raw cogrouped CSR applyInPandas kernel
-    (V2 ≡ V1 gate). In production kernel="csr" routes to the semi-external
-    kernel; "csr_cogroup" pins V2 so this gate keeps exercising it."""
-    e = lineitem_edges(spark, sf_dir)
-    res = pagerank(spark, e, max_iters=5, eps=0.0, kernel="csr_cogroup", partitions=8)
-    return res.state.select("id", F.round("rank", 6).alias("rank"))
-
-
 def lineitem_weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted edge view: weight = multiplicity of the (src, dst) pair in
     lineitem before dedup — the anchor/link-count analogue on a web graph."""
@@ -1620,7 +1611,7 @@ from linkgraph import simsearch, textops  # noqa: E402
 # Registry sizing: the driver checks the FIRST ~50 entries in dict order
 # (observed r1/r2 behavior), so the registry holds EXACTLY 50 — redundant
 # kernels are exercised by pytest equivalence gates instead of a driver
-# slot (csr_cogroup ≡ sem ≡ sql in tests/test_algos.py; LP 1-round
+# slot (sem ≡ sql in tests/test_algos.py; LP 1-round
 # semantics are round 1 of the 3-round unrolled oracle), and families that
 # share one scan are registered merged (set ops, string+hash funcs, the
 # per-doc metric scans, the one-row graph stats, the two ANN methods).

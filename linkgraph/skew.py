@@ -77,7 +77,7 @@ def salted_agg(
 
 
 # NOTE: vertex-cut hub splitting has exactly one implementation, inside
-# the csr/sem kernels' routing (pagerank._routed_edges: hub edges to
+# the sem kernel's routing (pagerank._routed_edges: hub edges to
 # per-cut partitions by hash(dst_id), hub state replicated per cut). A
 # standalone split_hub_sources() duplicate used to live here with zero
 # callers and zero tests — deleted so the cut-assignment rule cannot

@@ -30,22 +30,33 @@ def test_pagerank_converged_matches_golden(spark, wiki_edges_df, wiki_vertices_d
     assert np.allclose(got, want, rtol=0, atol=1e-6)
 
 
-def test_pagerank_csr_equals_sql_kernel(spark, wiki_edges_df, wiki_vertices_df, wiki_edges):
-    """V2 cogroup ≡ V1 within 1e-12 (SURVEY.md §4.1) on a 15-iteration run.
-
-    kernel="csr" routes to sem in production (the cogroup kernel pays O(E)
-    Arrow per superstep); "csr_cogroup" pins the raw V2 kernel for this
-    equivalence check."""
-    sql_r = pagerank(spark, wiki_edges_df, vertices=wiki_vertices_df, max_iters=15, eps=0.0)
-    csr_r = pagerank(
-        spark, wiki_edges_df, vertices=wiki_vertices_df, max_iters=15, eps=0.0,
-        kernel="csr_cogroup", partitions=8,
-    )
-    a = _vec(sql_r.state.select("id", "rank"), "rank")
-    b = _vec(csr_r.state.select("id", "rank"), "rank")
-    assert np.allclose(a, b, rtol=0, atol=1e-12)
+def test_pagerank_sql_equals_oracle_15iter(spark, wiki_edges_df, wiki_vertices_df, wiki_edges):
+    """V1 ≡ the pure-Python oracle within 1e-12 (SURVEY.md §4.1) on a
+    15-iteration run — fixed supersteps, so the check is per-iteration
+    exact, not just the converged band."""
+    res = pagerank(spark, wiki_edges_df, vertices=wiki_vertices_df, max_iters=15, eps=0.0)
+    got = _vec(res.state.select("id", "rank"), "rank")
     want, _ = oracle.pagerank(wiki_edges, WIKI_VOTE_N, max_iters=15, eps=0.0)
-    assert np.allclose(a, want, rtol=0, atol=1e-12)
+    assert np.allclose(got, want, rtol=0, atol=1e-12)
+
+
+def test_pagerank_kernel_is_sql_or_sem(spark, wiki_edges_df):
+    """``kernel`` accepts exactly {"sql", "sem"}: the retired cogrouped
+    V2 names raise instead of silently picking another kernel, and they
+    raise before any Spark job runs."""
+    from linkgraph.algos import pagerank_delta
+
+    sc = spark.sparkContext
+    for fn in (pagerank, pagerank_delta):
+        for kernel in ("csr", "csr_cogroup"):
+            group = f"kernel-check-{fn.__name__}-{kernel}"
+            sc.setJobGroup(group, group)
+            try:
+                with pytest.raises(ValueError, match="unknown kernel"):
+                    fn(spark, wiki_edges_df, max_iters=1, kernel=kernel)
+            finally:
+                sc.setJobGroup(None, None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_pagerank_sem_equals_sql_kernel(spark, wiki_edges_df, wiki_vertices_df, tmp_path):
@@ -252,23 +263,6 @@ def test_lp_exact(spark, wiki_edges_df, wiki_vertices_df):
     assert res.metrics[0]["changed_labels"] > 0
 
 
-def test_lp_agg_kernels_equivalent(spark, wiki_edges_df, wiki_vertices_df):
-    """All three LP aggregation kernels (two_level / mode / repart) produce
-    identical labels == golden on the wiki fixture. The tie-break is part
-    of the pinned convention — a kernel that differs on ties is WRONG, not
-    merely different (mode relies on Spark's deterministic-mode
-    lowest-value tie-break; repart on exchange-free two-level aggs)."""
-    want = golden("labels").sort_values("id")["label"].to_numpy()
-    for agg in ("two_level", "mode", "repart"):
-        res = label_propagation(
-            spark, wiki_edges_df, vertices=wiki_vertices_df, agg=agg
-        )
-        got = _vec(res.state.select("id", "label"), "label")
-        assert (got == want).all(), agg
-    with pytest.raises(ValueError):
-        label_propagation(spark, wiki_edges_df, agg="nope")
-
-
 def test_lp_frontier_gather_exact_equivalence(spark, wiki_edges_df, wiki_vertices_df):
     """The frontier-restricted gather (update computed only for dsts with
     >= 1 changed neighbor once the changed fraction drops under the gate)
@@ -368,7 +362,7 @@ def test_kcore_matches_networkx(spark, wiki_edges_df, wiki_vertices_df, wiki_edg
 
 @pytest.mark.slow
 def test_hub_stress_vertex_cut(spark):
-    """CSR kernel with a forced low hub threshold == oracle on the
+    """sem kernel with a forced low hub threshold == oracle on the
     hub-heavy fixture (vertex-cut splitting path exercised for real)."""
     from linkgraph.synth import HUB_STRESS_N, edges_df, hub_stress_edges
 
@@ -377,7 +371,7 @@ def test_hub_stress_vertex_cut(spark):
     verts = spark.range(HUB_STRESS_N).selectExpr("id")
     res = pagerank(
         spark, e, vertices=verts, max_iters=5, eps=0.0,
-        kernel="csr_cogroup", partitions=8, hub_threshold=100,
+        kernel="sem", partitions=8, hub_threshold=100,
     )
     got = _vec_n(res.state.select("id", "rank"), "rank", HUB_STRESS_N)
     want, _ = oracle.pagerank(arr, HUB_STRESS_N, max_iters=5, eps=0.0)

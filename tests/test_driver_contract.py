@@ -48,8 +48,6 @@ def test_every_query_is_oracled_or_allowlisted():
 # removal can't silently orphan a kernel. Maps dropped coverage -> the test
 # function (in tests/) that now carries it.
 DROPPED_QUERY_COVERAGE = {
-    # graph_pagerank_5iter_csr: cogroup kernel ≡ sql within 1e-12
-    "graph_pagerank_5iter_csr": ("test_algos.py", "test_pagerank_csr_equals_sql_kernel"),
     # graph_lp_1round: 1-round LP is round 1 of the 3-round unrolled oracle
     "graph_lp_1round": ("test_algos.py", "test_lp_exact"),
     # graph_pagerank_delta: V4 delta/frontier kernel ≡ V1 within 1e-12 at

@@ -309,10 +309,10 @@ def test_fresh_run_rotates_default_metrics_file(spark, tmp_path):
 
 def test_pagerank_rejects_salted_on_non_sql_kernels(spark, wiki_edges_df):
     """salted=True only has an implementation on the sql kernel; the
-    csr/sem kernels carry their own skew mitigation (hub vertex-cut).
+    sem kernel carries its own skew mitigation (hub vertex-cut).
     Silently ignoring the flag would make a salted-vs-plain benchmark on
     those kernels measure two identical runs — refuse instead."""
     import pytest
 
     with pytest.raises(ValueError, match="salted"):
-        pagerank(spark, wiki_edges_df, max_iters=1, kernel="csr_cogroup", salted=True)
+        pagerank(spark, wiki_edges_df, max_iters=1, kernel="sem", salted=True)
